@@ -1,0 +1,5 @@
+"""Steady, layer-attributed benchmark for the crawl -> text -> corpus engine.
+
+Entry point: ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>``; see ``perfbench/README.md``.
+"""
